@@ -53,11 +53,20 @@ object SparkEntry {
   )
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    packs.iterator.flatMap(_._1).toMap
+  def queries: Map[String, (SparkSession, String) => DataFrame] = queryMap
+  private lazy val queryMap = merged(packs.map(_._1))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    packs.iterator.flatMap(_._2).toMap
+  def oracleSql: Map[String, String] = oracleMap
+  private lazy val oracleMap = merged(packs.map(_._2))
+
+  /** The union of the packs' maps; a key declared by two packs fails
+    * instead of silently shadowing the other.
+    */
+  private[graft] def merged[V](maps: Seq[Map[String, V]]): Map[String, V] = {
+    val dups = maps.flatMap(_.keys).groupBy(identity).collect { case (k, ks) if ks.size > 1 => k }
+    require(dups.isEmpty, s"query keys declared twice: ${dups.toSeq.sorted.mkString(", ")}")
+    maps.foldLeft(Map.empty[String, V])(_ ++ _)
+  }
 }

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 
 /** Library-facing similarity search over embedding frames
   * (id: long, vector: array<float|double>). Unit-normalized vectors →
-  * dot product == cosine. All dots run through the fused codegen
-  * [[DotProduct]] expression.
+  * dot product == cosine. Dots run through the fused codegen
+  * [[DotProduct]] expression, except the exact all-pairs tier, whose
+  * kernel ([[ExactCosine]]) accumulates bit-identically.
   */
 object SimilarityOps {
 
@@ -31,39 +32,24 @@ object SimilarityOps {
         lit(-cid).as("nc"))
     }.toIndexedSeq: _*)
 
-  /** Brute-force global top-k most similar pairs. Exact baseline —
-    * quadratic; use [[ivfTopK]] at scale.
+  /** Exact global top-k most similar pairs `(id_a, id_b, cos)` with
+    * `id_a < id_b`, ordered by `cos` desc (rounded to 6dp), then `id_a`,
+    * `id_b`. Quadratic by design: every pair is scored by the exact
+    * kernel in [[ExactCosine]]; use [[ivfTopK]] at scale. Runs eagerly
+    * and returns a local frame of at most `k` rows.
     */
-  def cosineTopK(emb: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    val e = asDouble(emb, idCol, vecCol)
-    // BNLJ parallelism == streamed-side partitions; fan the pair scan
-    // out explicitly (small inputs otherwise arrive in 1-2 partitions)
-    val a = e.repartition(emb.sparkSession.sparkContext.defaultParallelism)
-      .select(col("vec_id").as("id_a"), col("e").as("e_a"))
-    val b = e.select(col("vec_id").as("id_b"), col("e").as("e_b"))
-    a.join(b, col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(DotProduct.dot(col("e_a"), col("e_b")), 6).as("cos"))
-      .orderBy(desc("cos"), col("id_a"), col("id_b"))
-      .limit(k)
-  }
+  def cosineTopK(emb: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame =
+    ExactCosine.topK(asDouble(emb, idCol, vecCol), k)
 
-  /** All pairs with cosine ≥ threshold (rounded to 6dp first so results
-    * are engine-stable).
+  /** All pairs `(id_a, id_b, cos)` with `id_a < id_b` and cosine ≥
+    * threshold (rounded to 6dp first so results are engine-stable).
+    * Quadratic by design, scored by the exact kernel in [[ExactCosine]];
+    * [[lshNearDupPairsAuto]] is the scale path. Runs eagerly and returns
+    * a local frame, so the output should be small.
     */
   def nearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
-      threshold: Double): DataFrame = {
-    val e = asDouble(emb, idCol, vecCol)
-    val a = e.repartition(emb.sparkSession.sparkContext.defaultParallelism)
-      .select(col("vec_id").as("id_a"), col("e").as("e_a"))
-    val b = e.select(col("vec_id").as("id_b"), col("e").as("e_b"))
-    // DedupOps.noPush keeps the threshold out of the BNLJ join
-    // condition (where the dot product would evaluate twice per pair)
-    a.join(b, col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(DotProduct.dot(col("e_a"), col("e_b")), 6).as("cos"))
-      .filter(col("cos") >= threshold || DedupOps.noPush)
-  }
+      threshold: Double): DataFrame =
+    ExactCosine.atLeast(asDouble(emb, idCol, vecCol), threshold)
 
   /** [[nearDupPairs]] restricted to intra-md5-group pairs — the linear,
     * deterministic exact-pair SAMPLE the scale-tier invariant reports

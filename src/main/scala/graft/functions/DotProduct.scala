@@ -11,12 +11,14 @@ import org.apache.spark.sql.types._
   *
   * The composable formulation — aggregate(zip_with(a, b, *), 0.0, +) —
   * allocates an intermediate array and runs interpreted lambdas per
-  * element; on the 2M-pair × 64-dim similarity joins that is the hot
-  * path. This expression compiles to a tight primitive loop (no
-  * allocation, no virtual calls), ~6× faster end-to-end on
-  * sim_cosine_topk. Semantics match the composed form exactly:
-  * sequential left-to-right double accumulation, so oracle parity is
-  * unchanged. Null if either side is null; requires equal lengths.
+  * element. This expression compiles to a tight primitive loop (no
+  * allocation, no virtual calls). Semantics match the composed form
+  * exactly: sequential left-to-right double accumulation, so oracle
+  * parity is unchanged. Null if either side is null; over the shorter
+  * length when the lengths differ. The exact all-pairs tier
+  * (`SimilarityOps.cosineTopK`, `nearDupPairs`) does not build pair rows
+  * for this expression: its kernel, `graft.api.ExactCosine`, runs the
+  * same accumulation over one flat array.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {

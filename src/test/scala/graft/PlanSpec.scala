@@ -83,10 +83,11 @@ class PlanSpec extends AnyFunSuite {
       s"no seed crossJoin may remain in the assignment path:\n$p")
   }
 
-  test("sim_cosine_topk uses the custom codegen dot product and top-k fusion") {
+  test("sim_cosine_topk is scored by the exact kernel, not a nested-loop pair join") {
+    // the kernel runs eagerly; the returned frame holds only the k rows
     val p = plan("sim_cosine_topk")
-    assert(p.contains("dotproduct"), p)
-    assert(p.contains("TakeOrderedAndProject"), p)
+    assert(p.contains("LocalTableScan"), p)
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
   }
 
   test("join_asof is one keyed exchange + window, never a range join") {
